@@ -35,6 +35,49 @@ def test_compact_iter_state_default_reads_module_at_call_time(spark, monkeypatch
     assert wide.rdd.getNumPartitions() > 1
 
 
+def _write_table(sf_dir, n_rows):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"x": list(range(n_rows))}), sf_dir / "t.parquet")
+
+
+def test_measured_memoizes_until_a_table_is_rewritten(tmp_path):
+    _write_table(tmp_path, 10)
+    calls = []
+
+    def fn():
+        calls.append(1)
+        return len(calls)
+
+    sf = str(tmp_path)
+    assert _util.measured("probe", sf, fn) == 1
+    assert _util.measured("probe", sf, fn) == 1  # unchanged input: no fn run
+    _write_table(tmp_path, 20)
+    assert _util.measured("probe", sf, fn) == 2  # rewritten table: measured again
+    assert len(calls) == 2
+
+
+def test_measured_count_reused_while_threshold_read_per_call(
+    spark, tmp_path, monkeypatch
+):
+    _write_table(tmp_path, 10)
+    key = ("regime_probe", str(tmp_path))
+    small, n = _util.compact_iter_state(
+        spark.range(0, 100).repartition(4), cache_key=key
+    )
+    assert n == 100
+    assert small.rdd.getNumPartitions() == 1
+    monkeypatch.setattr(_util, "SMALL_ITER_STATE_MAX_ROWS", 0)
+    # a 5-row frame under the same key: the cached count (100) is
+    # reused, and the patched threshold still flips the layout to wide
+    wide, n = _util.compact_iter_state(
+        spark.range(0, 5).repartition(4), cache_key=key
+    )
+    assert n == 100
+    assert wide.rdd.getNumPartitions() > 1
+
+
 @pytest.mark.parametrize("qid", ["graph_pagerank", "dedup_cluster_components"])
 def test_iterative_loops_wide_path_matches_compact(spark, sf_dir, qid, monkeypatch):
     """Forcing every round to run wide must not change the answer —

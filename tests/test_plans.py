@@ -277,10 +277,16 @@ def test_tpch_q19_residual_filter_not_nested_loop(spark, sf_dir, qdf):
     )
 
 
-def test_running_sum_reset_single_exchange(spark, sf_dir, qdf):
+@pytest.mark.parametrize("executed", [True, False], ids=["executed", "not_executed"])
+def test_running_sum_reset_single_exchange(spark, sf_dir, executed):
     # the (user, epoch) window must reuse the user_id partitioning:
-    # hashpartitioning(user_id) satisfies clustering on (user_id, epoch)
-    plan = physical_plan(qdf("win_running_sum_reset"))
+    # hashpartitioning(user_id) satisfies clustering on (user_id, epoch).
+    # Once AQE has run a frame, its explain also prints the final plan;
+    # physical_plan must count the same nodes either way.
+    df = QUERIES["win_running_sum_reset"](spark, sf_dir)
+    if executed:
+        df.toPandas()
+    plan = physical_plan(df)
     tree = plan.split("\n\n")[0]
     assert tree.count("Exchange") == 1, tree
     assert tree.count("Window") == 2

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import Tables
+from ._util import measured
 
 K = 8
 ITERS = 3
@@ -136,11 +137,6 @@ def _lloyd(t, cents, iters=ITERS):
 #: corpus anywhere.
 _KMEANS_SINGLE_TASK_MAX_ROWS = 100_000
 
-#: measured |embeddings| per sf_dir (llm._FANOUT_CACHE pattern): the
-#: row count of an immutable input is a constant — warm bench reps
-#: and driver retries shouldn't re-pay the sizing job.
-_EMB_N_CACHE: dict = {}
-
 
 def _kmeans_single_task(t):
     """(vec_id, cluster_id, sim_fp) via ONE Arrow task: seed + Lloyd +
@@ -217,10 +213,7 @@ def cluster_topics_kmeans(spark, sf_dir):
     import numpy as np
 
     t = Tables(spark, sf_dir)
-    n = _EMB_N_CACHE.get(sf_dir)
-    if n is None:
-        n = t.embeddings.count()
-        _EMB_N_CACHE[sf_dir] = n
+    n = measured("embeddings_rows", sf_dir, lambda: t.embeddings.count())
     if n <= _KMEANS_SINGLE_TASK_MAX_ROWS:
         assigned = _kmeans_single_task(t)
         return (

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import Tables
-from ._util import compact_iter_state, fan_out, ffix, ofix, r4
+from ._util import compact_iter_state, fan_out, ffix, measured, ofix, r4
 from .llm import COSINE_THRESHOLD
 
 SIMHASH_BITS = 32
@@ -39,10 +39,6 @@ NGRAM_JACCARD_THRESHOLD = 0.8
 #: sign bit and one slack bit untouched. The array path stays the
 #: general-scale shape (open vocabularies).
 NGRAM_MASK_MAX_VOCAB = 61
-#: memoized vocabulary size per sf_dir (immutable grading inputs —
-#: the sanctioned _FANOUT_CACHE pattern: a plan-shape scalar, never
-#: result data)
-_NGRAM_VOCAB_CACHE: dict[str, int] = {}
 
 
 @query(
@@ -107,7 +103,7 @@ def dedup_simhash(spark, sf_dir):
     # other (flushed by the r10 stress corpus)
     sig = fan_out(
         t.documents.select("doc_id", "text"),
-        cache_key=(sf_dir, "documents"),
+        cache_key=("documents", sf_dir),
     ).filter(
         F.expr("size(filter(split(text, ' '), t -> t != '')) > 0")
     ).select(
@@ -311,10 +307,8 @@ def dedup_ngram_jaccard(spark, sf_dir):
     # into one BIGINT mask: |A∩B| = bit_count(maskA & maskB), and the
     # verify joins move 8-byte masks instead of arrays.
     vocab = d.select(F.explode("toks").alias("tok")).distinct()
-    ck = f"ngram_jaccard_vocab:{sf_dir}"
-    if ck not in _NGRAM_VOCAB_CACHE:
-        _NGRAM_VOCAB_CACHE[ck] = vocab.count()
-    if _NGRAM_VOCAB_CACHE[ck] <= NGRAM_MASK_MAX_VOCAB:
+    n_vocab = measured("ngram_jaccard_vocab", sf_dir, vocab.count)
+    if n_vocab <= NGRAM_MASK_MAX_VOCAB:
         vmap = vocab.select(
             "tok",
             (F.row_number().over(Window.orderBy("tok")) - 1).alias("bit"),
@@ -612,7 +606,7 @@ def dedup_cluster_components(spark, sf_dir):
     #   adversarial chain graphs, no one-task serialization.
     edges, n_edges = compact_iter_state(
         pairs.union(pairs.select("dup_id", "keep_id")).toDF("src", "nbr"),
-        cache_key=f"dedup_cluster_components:{sf_dir}",
+        cache_key=("dedup_cluster_components", sf_dir),
     )
     if n_edges <= _util.SMALL_ITER_STATE_MAX_ROWS:
         labels = _cc_union_find(edges)
@@ -1024,7 +1018,7 @@ def dedup_semantic_cluster(spark, sf_dir):
         # with vec_id < max(8, floor(sqrt(n))) over the SAME nz-
         # filtered table the wide path counts
         small=(
-            f"semc:{sf_dir}",
+            ("semc", sf_dir),
             lambda n: max(8, int(math.floor(math.sqrt(n)))),
         ),
     ).select("vec_id", (F.col("packed") % SEMC_PACK_MOD).alias("cell"))
@@ -1053,7 +1047,7 @@ def dedup_semantic_cluster(spark, sf_dir):
     )
     edges, n_edges = compact_iter_state(
         prs.union(prs.select("v", "u")).toDF("src", "nbr"),
-        cache_key=f"dedup_semantic_cluster:{sf_dir}",
+        cache_key=("dedup_semantic_cluster", sf_dir),
     )
     if n_edges <= _util.SMALL_ITER_STATE_MAX_ROWS:
         labels = _cc_union_find(edges)
@@ -1598,7 +1592,7 @@ def dedup_incremental_minhash(spark, sf_dir):
             F.expr("(4 * max(doc_id)) div 5").alias("v")
         )
     )
-    sh, bands = _mhp_sig_bands(docs, fan_key=(sf_dir, "documents"))
+    sh, bands = _mhp_sig_bands(docs, fan_key=("documents", sf_dir))
     b = bands.crossJoin(F.broadcast(split))
     new_b = b.filter(F.col("doc_id") >= F.col("v")).select(
         F.col("doc_id").alias("new_id"), "band", "key"
@@ -1638,7 +1632,7 @@ def _bucketed_probe(spark, sf_dir, prefix="thrive_lsh"):
     t = Tables(spark, sf_dir)
     docs = t.documents
     split = docs.agg(F.expr("(4 * max(doc_id)) div 5").alias("v"))
-    sh, bands = _mhp_sig_bands(docs, fan_key=(sf_dir, "documents"))
+    sh, bands = _mhp_sig_bands(docs, fan_key=("documents", sf_dir))
     b = bands.crossJoin(F.broadcast(split))
     new_b = b.filter(F.col("doc_id") >= F.col("v")).select(
         F.col("doc_id").alias("new_id"), "band", "key"
@@ -1883,7 +1877,7 @@ def dedup_minhash_portable(spark, sf_dir):
     the band projection); the band join shuffles (doc_id, band, key)
     only; hashed-shingle sets travel only for banded candidates."""
     sh, bands = _mhp_sig_bands(
-        Tables(spark, sf_dir).documents, fan_key=(sf_dir, "documents")
+        Tables(spark, sf_dir).documents, fan_key=("documents", sf_dir)
     )
     cand = (
         bands.alias("a")

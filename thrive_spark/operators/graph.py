@@ -231,7 +231,7 @@ def graph_pagerank(spark, sf_dir):
     ranks = pagerank(
         und.select("src", "dst"),
         rounds=PR_ROUNDS,
-        cache_key=f"graph_pagerank_edges:{sf_dir}",
+        cache_key=("graph_pagerank_edges", sf_dir),
     )
     return ranks.select(
         F.col("node").alias("brand"),
@@ -394,7 +394,7 @@ def text_textrank_keywords(spark, sf_dir):
     ).select("p.src", "p.dst")
     und = bigrams.filter(F.col("src") != F.col("dst")).distinct()
     ranks = pagerank(
-        und, rounds=PR_ROUNDS, cache_key=f"text_rank_edges:{sf_dir}"
+        und, rounds=PR_ROUNDS, cache_key=("text_rank_edges", sf_dir)
     )
     return (
         ranks.orderBy(F.col("rf").desc(), "node")

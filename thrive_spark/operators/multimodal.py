@@ -695,7 +695,7 @@ def multimodal_image_jpeg(spark, sf_dir):
     # through one core (r13 gotcha); DCT+Huffman per-row compute
     # dwarfs the one-column shuffle, so fan_out is a clear win here
     # (measured ~5x at sf0.1), unlike the cheap tokenize ops
-    src = fan_out(src, cache_key=(sf_dir, "documents-jpeg"))
+    src = fan_out(src, cache_key=("documents-jpeg", sf_dir))
     return src.mapInPandas(
         run,
         "doc_id long, width long, height long, mcu_cols long, "
@@ -800,7 +800,7 @@ def multimodal_image_png(spark, sf_dir):
     ).select("doc_id", F.encode("text", "UTF-8").alias("img"))
     # r16: same single-split story as the jpeg exhibit — filter/
     # Paeth/zlib per-row compute dominates the one-column shuffle
-    src = fan_out(src, cache_key=(sf_dir, "documents-png"))
+    src = fan_out(src, cache_key=("documents-png", sf_dir))
     return src.mapInPandas(
         run,
         "doc_id long, width long, height long, "

@@ -8,9 +8,19 @@ from pyspark.sql import DataFrame
 
 
 def physical_plan(df: DataFrame) -> str:
-    """Formatted physical plan as a string."""
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
+    """Formatted physical plan as a string, as a never-executed frame
+    prints it.
+
+    Once an adaptive plan has run, its explain prints the final plan
+    above the initial one, so every node appears twice. Planning the
+    same analyzed plan afresh gives the initial plan alone, whether or
+    not ``df`` has been executed."""
+    jvm = df._sc._jvm  # noqa: SLF001
+    fresh = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        df.sparkSession._jsparkSession, df._jdf.logicalPlan()  # noqa: SLF001
+    )
+    return jvm.PythonSQLUtils.explainString(
+        fresh.queryExecution(), "formatted"
     )
 
 

@@ -1035,9 +1035,14 @@ def _detach_and_cleanup(spark, df, root: str):
     reads would dangle once the root is gone, and without this the
     driver / bench warm reps / stress sweep leak one /tmp tree per
     invocation (r11 advice)."""
+    return _rows_after_cleanup(spark, df.collect(), df.schema, root)
+
+
+def _rows_after_cleanup(spark, rows, schema, root: str):
+    """Delete the query's temp table root and return driver-side
+    ``rows`` as a local one-slice DataFrame."""
     import shutil
 
-    rows, schema = df.collect(), df.schema
     shutil.rmtree(root, ignore_errors=True)
     _evict_seg_cache_under(root)
     # ONE slice: createDataFrame parallelizes even a 3-row result over

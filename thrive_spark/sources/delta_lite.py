@@ -1589,7 +1589,7 @@ def scan_delta_log_table(spark, sf_dir):
         StructType,
     )
 
-    from .acid import _evict_seg_cache_under
+    from .acid import _rows_after_cleanup
     from ..operators._util import SCALE, fixed
 
     states = {ver: tbl.state(ver) for ver in tbl.versions()}
@@ -1622,14 +1622,7 @@ def scan_delta_log_table(spark, sf_dir):
         StructField("n_rows", LongType(), False),
         StructField("sum_price", DoubleType(), False),
     ])
-    import shutil
-
-    shutil.rmtree(root, ignore_errors=True)
-    _evict_seg_cache_under(root)
-    # numSlices=1, never coalesce(1) — see _detach_and_cleanup
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), out_schema
-    )
+    return _rows_after_cleanup(spark, rows, out_schema, root)
 
 
 @query(

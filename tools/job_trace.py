@@ -1,97 +1,55 @@
 """Trace the Spark jobs a query runs (count + per-job wall + names).
 
-Usage: python tools/job_trace.py <id1,id2,...> [sf_dir]
+Usage: python tools/job_trace.py <id1,id2,...> <sf_dir>
 
-Runs each query once warm, then once traced: job list is read from the
-local UI's REST API (always on in local mode), so the trace sees every
-job the query triggers — construction-side writes/collects AND the
-final noop materialization. VERDICT r16 item 6 wants job-count-bound
-exhibits (scan_delta_log_table) to show their sequential-job wall; this
-is the labelled-job trace that evidences it.
+Runs each query once warm, then once traced under its own job group.
+Job ids and times come from the status store, which is kept with the UI
+off, so the trace sees every job the query triggers — construction-side
+writes/collects AND the final noop materialization.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from thrive_spark import registry  # noqa: E402
-from thrive_spark.session import _RUNTIME_CONFS, _n_cpus, prepare  # noqa: E402
-
-registry.load_all()
-
-
-def _spark_with_ui():
-    """get_spark() clone with the UI ON (this tool reads its REST API;
-    spark.ui.enabled is builder-time only)."""
-    from pyspark.sql import SparkSession
-
-    cpus = _n_cpus()
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("thrive-job-trace")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-    )
-    for k, v in _RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return prepare(spark)
-
-
-def jobs_snapshot(ui: str) -> list[dict]:
-    apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    return json.load(
-        urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/jobs?status=succeeded")
-    )
+from thrive_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     ids = [s for s in sys.argv[1].split(",") if s]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    spark = _spark_with_ui()
-    ui = spark.sparkContext.uiWebUrl
+    sf_dir = sys.argv[2]
+    registry.load_all()
+    spark = get_spark("thrive-job-trace")
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
     for qid in ids:
         fn = registry.QUERIES[qid]
-        spark.sparkContext.setJobDescription(f"warm:{qid}")
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        before = {j["jobId"] for j in jobs_snapshot(ui)}
-        spark.sparkContext.setJobDescription(f"trace:{qid}")
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        time.sleep(0.3)  # let the UI catch up
-        jobs = [j for j in jobs_snapshot(ui) if j["jobId"] not in before]
-        jobs.sort(key=lambda j: j["jobId"])
+        for phase in ("warm", "trace"):
+            gid = f"{phase}:{qid}"
+            sc.setJobGroup(gid, gid)
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            wall = time.perf_counter() - t0
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = sorted(sc.statusTracker().getJobIdsForGroup(gid))
         print(f"== {qid}: {len(jobs)} jobs, wall {wall:.3f} s")
-        fmt = "%Y-%m-%dT%H:%M:%S.%f"
-        for j in jobs:
-            sub = j.get("submissionTime", "")[:-3]
-            comp = j.get("completionTime", "")[:-3]
-            try:
-                dur = (
-                    time.mktime(time.strptime(comp, fmt))
-                    + float("0." + comp.split(".")[-1])
-                    - time.mktime(time.strptime(sub, fmt))
-                    - float("0." + sub.split(".")[-1])
-                )
-                dur_s = f"{dur:7.3f}"
-            except Exception:  # noqa: BLE001
-                dur_s = "      ?"
-            name = (j.get("description") or j.get("name", ""))[:100]
+        for jid in jobs:
+            j = store.job(jid)
+            sub, comp, desc = j.submissionTime(), j.completionTime(), j.description()
+            dur_s = (
+                f"{(comp.get().getTime() - sub.get().getTime()) / 1e3:7.3f}"
+                if sub.isDefined() and comp.isDefined()
+                else "      ?"
+            )
+            name = (desc.get() if desc.isDefined() else j.name())[:100]
             print(
-                f"  job {j['jobId']:>4} {dur_s} s  stages={len(j.get('stageIds', []))} "
-                f"tasks={j.get('numTasks', '?'):>4}  {name}"
+                f"  job {jid:>4} {dur_s} s  stages={j.stageIds().size()} "
+                f"tasks={j.numTasks():>4}  {name}"
             )
 
 
